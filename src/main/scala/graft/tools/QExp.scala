@@ -199,7 +199,8 @@ object QExp {
         "mh" -> Seq("mh_v0" -> (() => mh_v0()), "mh_v1" -> (() => mh_v1())),
         "mhold" -> Seq("mh_r5" -> (() => mh_r5()), "mh_new" -> (() => mh_v0())),
         "lshold" -> Seq("lsh_r5" -> (() => lsh_r5()), "lsh_new" -> (() => lsh_v0())))
-      val which = if (args.length > 1) args.drop(1).toSeq else all.keys.toSeq
+      // mhold/lshold re-time a v0 under a second name: run them only when named
+      val which = if (args.length > 1) args.drop(1).toSeq else Seq("wr", "lsh", "mh")
       which.flatMap(all)
     }
 
@@ -213,35 +214,35 @@ object QExp {
     // (first-run/JIT cost included — the judged bench's per-query shape) and
     // exit. The equality check below would warm every variant, so it is
     // skipped; run the normal mode once beforehand to establish equality.
-    sys.env.get("SPARK_GRAFT_QEXP_COLD").foreach { want =>
-      val (n, f) = variants.find(_._1 == want)
-        .getOrElse(sys.error(s"unknown cold variant: $want"))
-      val t0 = System.nanoTime()
-      f().count()
-      println(f"[qexp] COLD $n wall=${(System.nanoTime() - t0) / 1e9}%.3f")
-      spark.stop()
-      return
-    }
-    // equality check first (rows + content hash), then interleaved timing
-    variants.groupBy(_._1.takeWhile(_ != '_')).foreach { case (g, vs) =>
-      val sigs = vs.map { case (n, f) =>
-        val df = f(); (n, df.count(), contentHash(df))
-      }
-      println(s"[qexp] group $g signatures: " + sigs.mkString(" "))
-    }
-    val walls = scala.collection.mutable.Map.empty[String, Vector[Double]]
-      .withDefaultValue(Vector.empty)
-    (0 until reps).foreach { _ =>
-      variants.foreach { case (n, f) =>
+    sys.env.get("SPARK_GRAFT_QEXP_COLD") match {
+      case Some(want) =>
+        val (n, f) = variants.find(_._1 == want)
+          .getOrElse(sys.error(s"unknown cold variant: $want"))
         val t0 = System.nanoTime()
         f().count()
-        walls(n) = walls(n) :+ (System.nanoTime() - t0) / 1e9
-      }
-    }
-    walls.toSeq.sortBy(_._1).foreach { case (n, ws) =>
-      val med = ws.sorted.apply((ws.size - 1) / 2)
-      println(f"[qexp] $n median=$med%.3f walls=" +
-        ws.map(w => f"$w%.3f").mkString("[", ",", "]"))
+        println(f"[qexp] COLD $n wall=${(System.nanoTime() - t0) / 1e9}%.3f")
+      case None =>
+        // equality check first (rows + content hash), then interleaved timing
+        variants.groupBy(_._1.takeWhile(_ != '_')).foreach { case (g, vs) =>
+          val sigs = vs.map { case (n, f) =>
+            val df = f(); (n, df.count(), contentHash(df))
+          }
+          println(s"[qexp] group $g signatures: " + sigs.mkString(" "))
+        }
+        val walls = scala.collection.mutable.Map.empty[String, Vector[Double]]
+          .withDefaultValue(Vector.empty)
+        (0 until reps).foreach { _ =>
+          variants.foreach { case (n, f) =>
+            val t0 = System.nanoTime()
+            f().count()
+            walls(n) = walls(n) :+ (System.nanoTime() - t0) / 1e9
+          }
+        }
+        walls.toSeq.sortBy(_._1).foreach { case (n, ws) =>
+          val med = ws.sorted.apply((ws.size - 1) / 2)
+          println(f"[qexp] $n median=$med%.3f walls=" +
+            ws.map(w => f"$w%.3f").mkString("[", ",", "]"))
+        }
     }
     spark.stop()
   }

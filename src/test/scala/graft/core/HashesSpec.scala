@@ -9,6 +9,8 @@ class HashesSpec extends AnyFunSuite {
       "e3b0c44298fc1c149afbf4c8996fb92427ae41e4649b934ca495991b7852b855")
     assert(Hashes.sha256Hex("abc") ===
       "ba7816bf8f01cfea414140de5dae2223b00361a396177a9cb410ff61f20015ad")
+    assert(Hashes.sha256Hex("abcdbcdecdefdefgefghfghighijhijkijkljklmklmnlmnomnopnopq") ===
+      "248d6a61d20638b8e5c026930c3e6039a33ce45964ff2167f6ecedd419db06c1")
   }
 
   test("xxh64 and murmur128 are deterministic and spread") {

@@ -53,7 +53,15 @@ class TextExtractSpec extends AnyFunSuite {
       "x<br/>y<div class=\"z\" data-a='b'>w</div>",
       "x\ny\nw"),
     ("empty input", "", ""),
-    ("tag at EOF", "a<", "a<"))
+    ("tag at EOF", "a<", "a<"),
+    ("entity split by a tag decodes", "x &am<b>p; y", "x & y"),
+    ("nbsp joins a space run", "a&nbsp; \t&nbsp;b", "a b"),
+    ("trim drops control chars", "\u0001 a \u0001", "a"),
+    ("CR and CRLF are one newline each", "a\rb\r\r\nc", "a\nb\n\nc"),
+    ("non-ASCII tag name is not a block", "<t\u0130tle>x</t\u0130tle>y", "xy"),
+    ("no re-decoding", "a&amp;amp;b", "a&amp;b"),
+    ("spaced newline run collapses to 2", "p\n \n \n \nq", "p\n\nq"),
+    ("decoded brackets are not tags", "&lt;p&gt;x", "<p>x"))
 
   goldens.foreach { case (name, html, expected) =>
     test(s"golden: $name") {
