@@ -45,8 +45,8 @@ object Bench {
     // commit — O(files) non-scaling wall across the five concurrent snapshot
     // writes; v2 renames task-side (parallel, scales with cores)
     .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-    // AQE off for the bench session: measured (tools.AqeAB, same-session
-    // alternating reps) ~2-4 s faster per 16-core round (22.1/23.9 vs
+    // AQE off for the bench session: measured (same-session alternating
+    // reps, BENCH.md "Round-3 serial-fraction cuts" item 4) ~2-4 s faster per 16-core round (22.1/23.9 vs
     // 24.6/27.6 s clean reps), neutral at 4 cores — its per-shuffle-stage
     // materialization barriers bind at high core counts and tiny stages. At
     // real cluster scale keep AQE ON (skew-join/coalesce pay there); the

@@ -19,16 +19,17 @@ import graft.sources.SnapshotStore
   *    text+links are extracted executor-locally and html never shuffles;
   *  - all wide operations key on hashes (xxh64 for ordering/bloom, murmur128
   *    for exact identity), never raw URL strings;
-  *  - robots is a broadcast join (tiny per-host table);
+  *  - robots rules are memoized per executor inside the gate projection — no
+  *    robots job and no driver robots structure;
   *  - the URL-seen probe routes on a broadcast bloom filter: bloom-clear links
   *    are *definitely* new (bloom has no false negatives) and skip the exact
   *    join entirely; only bloom-hits (≈ seen + fpp·new) reach it, and the
-  *    default scan-form join (seenAntiJoinScan) broadcasts those suspect keys
-  *    so the seen table itself is only SCANNED, never shuffled. The seen set
-  *    stays exact — a false positive costs one wasted join probe, never a
-  *    dropped URL (SURVEY.md §4.2 exactness backstop);
-  *  - hot hosts (zipfian frontier) get a salted two-phase politeness top-k so a
-  *    single host cannot skew the window shuffle (SURVEY.md §4.3);
+  *    scan-form join (seenAntiJoinScan) broadcasts those suspect keys so the
+  *    seen table itself is only SCANNED, never shuffled. The seen set stays
+  *    exact — a false positive costs one wasted join probe, never a dropped
+  *    URL (SURVEY.md §4.2 exactness backstop);
+  *  - every host goes through a salted two-phase politeness top-k so a hot
+  *    host (zipfian frontier) cannot skew the window shuffle (SURVEY.md §4.3);
   *  - the global round sequence is assigned with range-partition + per-partition
   *    offsets — a total order across files without a single-reducer sort.
   */
@@ -46,7 +47,7 @@ object CrawlRound {
 
   private def childPriority(parent: Int): Int = math.max(parent - 1, 0)
 
-  /** Per-executor robots cache for the fused gate form: rules are "fetched"
+  /** Per-executor robots cache for the politeness gate: rules are "fetched"
     * (SyntheticWeb — the sandbox's only network) and parsed at most once per
     * (executor, host), then shared by every task on that executor — the
     * Mercator robots cache moved executor-side, which is what lets the gate
@@ -63,23 +64,6 @@ object CrawlRound {
 
   /** xxh64 of a url, computed executor-side — the URL-seen filter key. */
   private val xxh64OfUrl = udf((u: String) => Hashes.xxh64(u))
-
-  /** Distributed cuckoo build over any DataFrame with a `url` column (the
-    * cold-path / regrow rebuild — the seen set never passes through the
-    * driver). Doubles capacity until no insert was dropped. */
-  private[operators] def cuckooOfUrls(urls: org.apache.spark.sql.DataFrame,
-      expectedItems: Long): graft.functions.CuckooFilter = {
-    var cap = math.max(expectedItems, 1024L)
-    var cf: graft.functions.CuckooFilter = null
-    while (cf == null || cf.failedInserts > 0) {
-      val bytes = urls.select(xxh64OfUrl(col("url")).as("h")).coalesce(4)
-        .select(org.apache.spark.sql.graftexpr.CuckooAgg(col("h"), cap).as("cf"))
-        .head().getAs[Array[Byte]](0)
-      cf = graft.functions.CuckooFilter.deserialize(bytes)
-      cap *= 2
-    }
-    cf
-  }
 
   /** Per-shard bloom sizing, CLAMPED to Spark's BloomFilterAggregate limits.
     * BloomFilterAggregate silently clamps estimatedNumItems/numBits to
@@ -152,18 +136,18 @@ object CrawlRound {
 
   /** J1 exact URL-seen dedup, SHUFFLE form: plain left-anti join. Both sides
     * exchange on the 128-bit key — at 10^10 seen URLs that is a full seen-set
-    * shuffle EVERY round, which is why this is not the default. It remains
-    * the right form when the probe side is O(candidates) (no filter routed
-    * a small suspect set: useBloom=false, shard cold path) or at suspect
-    * cardinalities past broadcast reach (documented in CrawlConfig). */
+    * shuffle, so it serves only probes that no filter shrank: the probe side
+    * is then O(candidates) (useBloom=false, shard cold path) and too large to
+    * broadcast. */
   private[graft] def seenAntiJoinShuffle(seen: org.apache.spark.sql.DataFrame,
       suspects: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     suspects.join(seen.select(col("url_hash_hi"), col("url_hash_lo")),
       Seq("url_hash_hi", "url_hash_lo"), "left_anti")
 
-  /** J1 exact URL-seen dedup, SCAN form (default): the seen set is only ever
-    * SCANNED, never shuffled. The filter route already shrank the probe side
-    * to suspects ≈ true-dups + fpp·new — a small set by construction — so:
+  /** J1 exact URL-seen dedup, SCAN form, for filter-routed suspects: the seen
+    * set is only ever SCANNED, never shuffled. The filter route shrank the
+    * probe side to suspects ≈ true-dups + fpp·new — a small set by
+    * construction — so:
     *   (1) semi-join seen ⋉ broadcast(suspect keys): a narrow projection
     *       scan of the seen table emitting only the keys that ARE seen
     *       (≤ |suspects| rows);
@@ -203,12 +187,7 @@ object CrawlRound {
       .write.parquet(pending.seenDeltaPath)
     spark.emptyDataset[FetchResult].write.parquet(pending.pagesPath)
     spark.emptyDataset[LineageRow].write.parquet(pending.lineagePath)
-    if (cfg.filterKind == "cuckoo") {
-      val cf = graft.functions.CuckooFilter.create(cfg.bloomExpectedItems)
-      seeds.foreach(e => require(cf.put(e.url_hash),
-        "cuckoo filter over capacity at init — raise bloomExpectedItems"))
-      pending.writeCuckoo(cf)
-    } else if (cfg.filterShards > 0) {
+    if (cfg.filterShards > 0) {
       // sharded config: write the per-shard files directly — never allocate
       // the monolithic expectedItems-sized filter (at the 10^10 design point
       // that is ~12 GB of driver heap to index a handful of seeds). One
@@ -242,10 +221,10 @@ object CrawlRound {
 
     // In the delta layout, loadFrontier returns a merge-on-read plan (delta
     // window + bloom route + 128-bit anti-join) that EVERY consumer of
-    // due/notDue would otherwise re-execute — robots fetch, hot-host detect,
-    // the gate count, the frontier write — multiplying the reconstruction
-    // cost per round and eroding the O(churn) win the layout buys. Persist
-    // the reconstruction for the round; unpersisted with the round caches.
+    // due/notDue would otherwise re-execute — the gate, the gate count, the
+    // frontier write — multiplying the reconstruction cost per round and
+    // eroding the O(churn) win the layout buys. Persist the reconstruction
+    // for the round; unpersisted with the round caches.
     val frontierRaw = store.loadFrontier(k)
     val frontier =
       if (store.hasFullFrontier(k)) frontierRaw else frontierRaw.persist()
@@ -253,152 +232,40 @@ object CrawlRound {
     val due = frontier.filter($"next_fetch_ts" <= rts)
     val notDue = frontier.filter($"next_fetch_ts" > rts)
 
-    // J2: the robots cache, in three equivalent forms (cfg.robotsForm; crawl
-    // output identical, equivalence-tested). "fused" (default): rules are
-    // memoized per executor inside the gate projection — no robots job at
-    // all (the dedicated distinct-hosts pass was a measured ~0.7–1 s
-    // constant at every core count — pure non-scaling round fraction).
-    // "map": the classic Mercator driver-resident robots cache — one
-    // distinct-hosts job, rules compiled driver-side and broadcast (also
-    // fuses hot-host detection into the same groupBy). "join": robots bodies
-    // ride a broadcast-joined (host, body) table with executor-side memoized
-    // parsing — the ≳10^7-distinct-hosts/round form with no O(all-hosts)
-    // driver structure. All rules come from the pinned RFC 9309 parser
-    // (deterministic SyntheticWeb bodies — the only network in this sandbox).
-    val defaultDelay = cfg.crawlDelayDefaultMs
-    val (wrRaw, hotHosts, rulesBcOpt, robotsCacheOpt) = if (cfg.robotsForm == "fused") {
-      // FUSED FORM (default): rules come from a per-executor memoized cache
-      // keyed by host — the robots "fetch" happens at most once per
-      // (executor, host) inside the gate projection itself. No distinct-
-      // hosts job, no driver map, no broadcast: the robots barrier that cost
-      // the round a constant ~0.7–1 s at EVERY core count (job + collect +
-      // rules serialization) disappears from the critical path entirely.
-      // UDF justified (same rule as the other forms): rules MUST come from
-      // the pinned RFC 9309 parser, which parse_url/regex cannot express.
-      val robotsOkU = udf { (host: String, url: String) =>
-        hostRules(host).allowed(UrlCanon.pathOf(url))
-      }
-      val delayU = udf { (host: String) => hostRules(host).crawlDelayMs }
-      val wr = due
-        .withColumn("crawl_delay_ms", delayU($"host"))
-        .withColumn("robots_ok", robotsOkU($"host", $"url"))
-      (wr, Map.empty[String, Int], None, None)
-    } else if (cfg.robotsForm == "join") {
-      // SCALE FORM (≳10^7 distinct hosts/round): robots bodies ride a
-      // broadcast-joined (host, body) table — "fetched" executor-side — and
-      // rules compile lazily per executor with a memoized parse. No
-      // O(all-hosts) driver structure anywhere: the only collect is the
-      // hot-host list, O(#hosts over threshold) by definition.
-      val robotsBodyU = udf { (h: String) => SyntheticWeb.robotsBody(h) }
-      val allowedU = udf { (body: String, url: String) =>
-        Robots.cachedParse(body).allowed(UrlCanon.pathOf(url))
-      }
-      val delayU = udf { (body: String) => Robots.cachedParse(body).crawlDelayMs }
-      // persist + count so the trace measures the actual robots "fetch"
-      // (body generation over distinct hosts) instead of timing a lazy plan
-      // at ~0s and misattributing the cost to a downstream stage
-      val robotsDf = traced("robots-fetch") {
-        val df = due.select($"host").distinct()
-          .withColumn("robots_body", robotsBodyU($"host")).persist()
-        df.count()
-        df
-      }
-      // F2 robots gate — denied URLs are dropped for good (they stay in the
-      // seen set, so they are never re-enqueued either). Pinned behavior.
-      val wr = due.join(broadcast(robotsDf), Seq("host"))
-        .withColumn("crawl_delay_ms", delayU($"robots_body"))
-        .withColumn("robots_ok", allowedU($"robots_body", $"url"))
-        .drop("robots_body")
-      // saltAllHosts makes hot-host DETECTION moot (everything is salted),
-      // so the counts job is skipped — one less pre-fetch barrier
-      val hot: Map[String, Int] =
-        if (cfg.saltAllHosts) Map.empty
-        else traced("hot-hosts")(
-          due.groupBy($"host").count()
-            .filter($"count" > cfg.hotHostThreshold)
-            .select($"host").as[String].collect()
-            .map(h => h -> cfg.saltBuckets).toMap)
-      (wr, hot, None, Some(robotsDf))
-    } else {
-      // MAP FORM (the driver-resident Mercator robots cache): one job serves two
-      // driver maps — distinct due hosts (rules, compiled driver-side and
-      // broadcast) and per-host due counts (hot-host detection).
-      val dueHostCounts: Map[String, Long] =
-        traced("robots-fetch")(due.groupBy($"host").count()
-          .as[(String, Long)].collect().toMap)
-      val hostRules: Map[String, Robots.Rules] =
-        dueHostCounts.keysIterator.map(h => h -> SyntheticWeb.robotsFor(h)).toMap
-      val rulesBc = spark.sparkContext.broadcast(hostRules)
-      val robotsOk = udf { (host: String, url: String) =>
-        rulesBc.value.get(host).forall(_.allowed(UrlCanon.pathOf(url)))
-      }
-      val delayOf = udf { (host: String) =>
-        rulesBc.value.get(host).map(_.crawlDelayMs).getOrElse(defaultDelay)
-      }
-      // F2 robots gate — denied URLs are dropped for good (they stay in the
-      // seen set, so they are never re-enqueued either). Pinned behavior.
-      val wr = due
-        .withColumn("crawl_delay_ms", delayOf($"host"))
-        .withColumn("robots_ok", robotsOk($"host", $"url"))
-      val hot: Map[String, Int] = traced("hot-hosts")(
-        dueHostCounts.iterator
-          .filter { case (_, n) => n > cfg.hotHostThreshold }
-          .map { case (h, _) => h -> cfg.saltBuckets }.toMap)
-      (wr, hot, Some(rulesBc), None)
+    // J2 + F2 robots gate: rules are memoized per executor inside the gate
+    // projection (hostRules) — no robots job at all (a dedicated
+    // distinct-hosts pass was a measured ~0.7–1 s constant at every core
+    // count — pure non-scaling round fraction). Denied URLs are dropped for
+    // good (they stay in the seen set, so they are never re-enqueued
+    // either). Pinned behavior. UDF justified: rules MUST come from the
+    // pinned RFC 9309 parser, which parse_url/regex cannot express.
+    val robotsOkU = udf { (host: String, url: String) =>
+      hostRules(host).allowed(UrlCanon.pathOf(url))
     }
-    // Gate counts ride as OBSERVED metrics on the first job that
-    // materializes withRobots (the politeness/sequence pass) instead of a
-    // dedicated agg job — that barrier was a measured non-scaling slice of
-    // the round at every core count. Observation metrics are collected by
-    // the first action over the plan (the observe node sits under the
-    // persist, so exactly one full scan feeds it); the values are read at
-    // metrics time, long after that action completed.
-    val gateObs = org.apache.spark.sql.Observation()
-    val withRobots = wrRaw
-      .observe(gateObs, count(lit(1)).as("n_due"),
-        // coalesce: sum over an empty gate is NULL, not 0
-        coalesce(sum(when($"robots_ok", 1L).otherwise(0L)), lit(0L))
-          .as("n_allowed"))
+    val delayU = udf { (host: String) => hostRules(host).crawlDelayMs }
+    // Persisted: the politeness/sequence pass materializes it, and the gate
+    // count (launched with the writes) and the delta-layout removals reread
+    // the cache instead of re-running the gate.
+    val withRobots = due
+      .withColumn("crawl_delay_ms", delayU($"host"))
+      .withColumn("robots_ok", robotsOkU($"host", $"url"))
       .persist()
     val allowed = withRobots.filter($"robots_ok")
 
-    // --- politeness (W1/W2 + §4.3 two-phase salted top-k for hot hosts) ----
+    // --- politeness (W1/W2 + §4.3 two-phase salted top-k) -------------------
     val ord: Seq[Column] =
       Seq($"priority".desc, $"next_fetch_ts".asc, $"url_hash".asc)
-    // hot-host detection keys off DUE counts (due ≥ allowed, so this can
-    // only salt MORE hosts than allowed-counts would — salting is
-    // semantics-neutral by the phase-1 keep-proof below, and the
-    // salted==unsalted equivalence test pins that)
-    val (phase1Kept, phase1Dropped, phase1CacheOpt) =
-      if (!cfg.saltAllHosts && hotHosts.isEmpty)
-        (allowed, allowed.limit(0), None)
-      else {
-        // saltAllHosts (default): salt is a codegen pmod column — no UDF, no
-        // broadcast map — and pmod(h, B) == floorMod(h, B) for the same B,
-        // so the buckets match what hot-host detection would have produced.
-        // The keep-proof below makes salting semantics-neutral for EVERY
-        // host (cold hosts simply never overflow a bucket's top-budget), so
-        // salting unconditionally trades a per-host counts barrier for zero
-        // output change.
-        val saltCol =
-          if (cfg.saltAllHosts)
-            pmod($"url_hash", lit(cfg.saltBuckets.toLong)).cast("int")
-          else {
-            val hot = spark.sparkContext.broadcast(hotHosts)
-            val saltOf = udf { (host: String, h: Long) =>
-              hot.value.get(host).map(b => math.floorMod(h, b.toLong).toInt).getOrElse(0)
-            }
-            saltOf($"host", $"url_hash")
-          }
-        val salted = allowed.withColumn("salt", saltCol)
-        val w1 = Window.partitionBy($"host", $"salt").orderBy(ord: _*)
-        val ranked = salted.withColumn("srank", row_number().over(w1)).persist()
-        // any row in a host's true top-budget is in its salt bucket's local
-        // top-budget, so phase 1 never drops a row phase 2 would keep
-        (ranked.filter($"srank" <= cfg.hostBudget).drop("salt", "srank"),
-          ranked.filter($"srank" > cfg.hostBudget).drop("salt", "srank"),
-          Some(ranked))
-      }
+    // Every host is salted with a codegen pmod column — no UDF, no broadcast
+    // map, no per-host counts barrier. Any row in a host's true top-budget is
+    // in its salt bucket's local top-budget, so phase 1 never drops a row
+    // phase 2 would keep: salting is semantics-neutral for every host (cold
+    // hosts simply never overflow a bucket's top-budget).
+    val w1 = Window.partitionBy($"host", $"salt").orderBy(ord: _*)
+    val ranked = allowed
+      .withColumn("salt", pmod($"url_hash", lit(cfg.saltBuckets.toLong)).cast("int"))
+      .withColumn("srank", row_number().over(w1)).persist()
+    val phase1Kept = ranked.filter($"srank" <= cfg.hostBudget).drop("salt", "srank")
+    val phase1Dropped = ranked.filter($"srank" > cfg.hostBudget).drop("salt", "srank")
     val w2 = Window.partitionBy($"host").orderBy(ord: _*)
     val hostRanked = phase1Kept.withColumn("host_rank", row_number().over(w2)).persist()
     // opt-in adaptive backoff: hosts over the error-rate threshold in the
@@ -442,15 +309,9 @@ object CrawlRound {
         $"priority", $"next_fetch_ts", $"discovered_round", $"retries",
         $"host_rank", $"seq", $"fetch_ts")
       .as[FetchTask]
-    // cfg.fetchWaves: `sequenced`'s range partitions become the fetch
-    // mapPartitions tasks (75%+ of round wall); at exactly one task per core
-    // a single straggler extends the whole stage. >1 packs stragglers across
-    // waves at the cost of more tasks/files downstream (fetched cache, page
-    // writes). Output is byte-identical at any value (unique sort keys →
-    // same global order). Default 1; tools.WaveAB measures the trade.
-    val (sequenced, seqParent) =
-      assignGlobalSeq(spark, preTasks,
-        shufflePartitions * math.max(cfg.fetchWaves, 1))
+    // `sequenced`'s range partitions become the fetch mapPartitions tasks:
+    // one per shuffle partition
+    val (sequenced, seqParent) = assignGlobalSeq(spark, preTasks, shufflePartitions)
     val tasks = sequenced.filter($"seq" < cfg.roundCap)
     val capDropped = sequenced.filter($"seq" >= cfg.roundCap)
 
@@ -510,12 +371,12 @@ object CrawlRound {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    // every write future is tracked so a failure anywhere between begin and
-    // commit can DRAIN them before dropping the tmp dir (Scala Futures are
-    // not cancellable; aborting while a write still runs would race a
-    // retry's begin(k+1) deleting the dir under it)
-    val launched = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
-    def fut(body: => Unit): Future[Unit] = {
+    // every write and count future is tracked so a failure anywhere between
+    // begin and commit can DRAIN them before dropping the tmp dir (Scala
+    // Futures are not cancellable; aborting while a write still runs would
+    // race a retry's begin(k+1) deleting the dir under it)
+    val launched = scala.collection.mutable.ArrayBuffer.empty[Future[_]]
+    def fut[T](body: => T): Future[T] = {
       val f = Future(scala.concurrent.blocking(body))
       launched.synchronized { launched += f }
       f
@@ -549,69 +410,48 @@ object CrawlRound {
     // of the round's non-scaling serial fraction
 
     // --- dedup vs URL-seen: filter route (A3) + exact anti-join (J1) -------
-    // filter-clear ⇒ definitely new (no false negatives) ⇒ skip the shuffle;
-    // filter-hit ⇒ maybe seen ⇒ exact anti-join. Same contract for bloom
-    // (built-in) and cuckoo (graft TypedImperativeAggregate, deletable).
+    // filter-clear ⇒ definitely new (no false negatives) ⇒ skip the join;
+    // filter-hit ⇒ maybe seen ⇒ exact anti-join.
     //
     // Cumulative filter: loaded from snapshot k, or — cold path, filter file
     // lost — rebuilt DISTRIBUTED from the exact seen set (xxh64(url)
-    // recomputed executor-side, aggregated via stat.bloomFilter / CuckooAgg).
+    // recomputed executor-side, aggregated via stat.bloomFilter).
     // Never streamed through the driver: at the 10^10-URL design point a
     // driver-side iteration of the seen set would bottleneck exactly the
     // recovery path that matters. Kept as BYTES so the probe broadcast and
     // the persist-path merge each deserialize a private instance (merge
     // mutates; the broadcast copy must stay immutable).
     val seen = store.loadSeen(k)
-    lazy val prevCuckooBytes: Array[Byte] =
-      store.loadCuckoo(k).map(_.serialized).getOrElse(
-        traced("cuckoo-cold-rebuild")(
-          cuckooOfUrls(seen.toDF(), cfg.bloomExpectedItems).serialized))
     lazy val prevBloomBytes: Array[Byte] =
       store.loadBloom(k).map(bloomBytes).getOrElse(
         traced("bloom-cold-rebuild")(bloomBytes(
           bloomOfUrls(seen.toDF(), cfg.bloomExpectedItems, cfg.bloomFpp))))
-    // filterShards > 0 (bloom kind): the cumulative filter is SHARDED by
+    // filterShards > 0: the cumulative filter is SHARDED by
     // pmod(url_hash, n) — candidates route to their shard's partition and
     // probe a partition-local filter, so per-executor filter memory is
     // O(total/n) instead of the whole (≈12 GB at 10^10 keys, 1% fpp —
     // unbroadcastable). Exactness backstop unchanged.
-    val sharded =
-      cfg.useBloom && cfg.filterKind == "bloom" && cfg.filterShards > 0
-    val probeOpt: Option[org.apache.spark.sql.expressions.UserDefinedFunction] =
-      if (!cfg.useBloom || sharded) None
-      else if (cfg.filterKind == "cuckoo") {
-        val bc = spark.sparkContext.broadcast(
-          graft.functions.CuckooFilter.deserialize(prevCuckooBytes))
-        Some(udf((h: Long) => bc.value.mightContain(h)))
-      } else {
-        val bfb = spark.sparkContext.broadcast(bloomOf(prevBloomBytes))
-        Some(udf((h: Long) => bfb.value.mightContainLong(h)))
-      }
-    // `filtered = true` marks a SUSPECT set (bloom/cuckoo/shard hits — a
-    // small fraction of candidates by construction), which unlocks the
-    // scan-form join; unfiltered inputs (useBloom=false, shard cold path)
-    // are O(candidates) and stay on the shuffle form regardless of config.
-    def antiJoinAll(df: org.apache.spark.sql.DataFrame, filtered: Boolean) =
-      if (filtered && cfg.seenJoin == "scan") seenAntiJoinScan(seen.toDF(), df)
-      else seenAntiJoinShuffle(seen.toDF(), df)
+    val sharded = cfg.useBloom && cfg.filterShards > 0
+    // The join form follows from the probe side: filter-routed suspects are
+    // a small fraction of candidates by construction and take the scan form;
+    // unfiltered probes (useBloom=false, shard cold path) are O(candidates)
+    // and take the shuffle form.
+    def routed(flagged: org.apache.spark.sql.DataFrame, maybeSeen: Column) =
+      seenAntiJoinScan(seen.toDF(), flagged.filter(maybeSeen))
+        .unionByName(flagged.filter(!maybeSeen))
     val trulyNew =
-      (if (sharded && store.filterShardsExist(k, cfg.filterShards)) {
-        val flagged = shardProbe(spark, store, k, cand, cfg)
-        val suspects = flagged.filter($"maybe_seen").drop("maybe_seen")
-        val definitelyNew = flagged.filter(!$"maybe_seen").drop("maybe_seen")
-        antiJoinAll(suspects, filtered = true).unionByName(definitelyNew)
-      } else if (sharded) {
-        // cold path (shard files absent — e.g. round 0, whose snapshot only
-        // carries the monolithic init filter): exact anti-join this round;
-        // the lifecycle below writes the full shard set for snapshot k+1
-        antiJoinAll(cand, filtered = false)
-      } else probeOpt match {
-        case Some(mightContain) =>
-          val suspects = cand.filter(mightContain($"url_hash"))
-          val definitelyNew = cand.filter(!mightContain($"url_hash"))
-          antiJoinAll(suspects, filtered = true).unionByName(definitelyNew)
-        case None =>
-          antiJoinAll(cand, filtered = false)
+      (if (sharded && store.filterShardsExist(k, cfg.filterShards))
+        routed(shardProbe(spark, store, k, cand, cfg), $"maybe_seen")
+          .drop("maybe_seen")
+      else if (cfg.useBloom && !sharded) {
+        val bfb = spark.sparkContext.broadcast(bloomOf(prevBloomBytes))
+        val mightContain = udf((h: Long) => bfb.value.mightContainLong(h))
+        routed(cand, mightContain($"url_hash"))
+      }
+      // unfiltered: useBloom=false, or the shard cold path (shard files
+      // absent — e.g. round 0, whose snapshot only carries the monolithic
+      // init filter; the lifecycle below writes the full shard set for k+1)
+      else seenAntiJoinShuffle(seen.toDF(), cand)
       // n_new is counted AFTER the writes from the populated cache (like
       // nCand below), NOT via an Observation here: the first actions over
       // trulyNew are THREE concurrent write jobs racing to materialize the
@@ -619,7 +459,7 @@ object CrawlRound {
       // completes — accumulator updates from another job's still-running
       // tasks would be missing, silently undercounting n_new (and with it
       // the frontier/seen manifest arithmetic every later round inherits).
-      }).persist()
+      ).persist()
 
     val newEntries = trulyNew.select(
         $"url", $"url_hash", $"url_hash_hi", $"url_hash_lo", $"host", $"priority",
@@ -627,13 +467,6 @@ object CrawlRound {
         lit(0).as("retries"))
       .as[FrontierEntry]
 
-    // U1: the three parts are disjoint by construction (new ⟂ seen ⊇ frontier;
-    // notDue ⟂ deferred by the due filter) — plain union, no merge shuffle.
-    // Persisted because the range write needs two passes (boundary sampling +
-    // the shuffle itself) and must not recompute the union branches.
-    // Delta mode skips the persist: the full union is only consumed on the
-    // rare fallback count — caching 10^10 rows for that would defeat the
-    // point of the log-structured layout.
     val deltaMode = cfg.frontierDeltas && {
       if (cfg.compactFrontierChurnRatio > 0) {
         // churn-driven cadence: delta while Σ delta rows since the last full
@@ -641,23 +474,23 @@ object CrawlRound {
         // manifests already on disk (snapshot r's manifest holds round r-1's
         // metrics; its delta rows = deferred + new upserts + fetched +
         // denied removals) — no jobs, O(chain length) driver string parses.
-        val base = (k to 0 by -1).find(store.hasFullFrontier)
-        val baseSize = base.flatMap(b => manifestField(store, b, "frontier_size"))
-        val chainChurn = base.map { b =>
-          ((b + 1) to k).map { r =>
-            Seq("deferred", "new_urls", "fetched", "robots_denied")
-              .map(f => manifestField(store, r, f).getOrElse(0L)).sum
-          }.sum
-        }.getOrElse(0L)
-        baseSize match {
-          case Some(bs) => chainChurn < (cfg.compactFrontierChurnRatio * bs).toLong
-          case None => (k + 1) % math.max(cfg.compactFrontierEvery, 1) != 0
-        }
+        // loadFrontier(k) above already failed unless a full base exists.
+        val base = (k to 0 by -1).find(store.hasFullFrontier).get
+        val chainChurn = ((base + 1) to k).map { r =>
+          val m = metricsAt(store, r)
+          m.deferred + m.new_urls + m.fetched + m.robots_denied
+        }.sum
+        chainChurn <
+          (cfg.compactFrontierChurnRatio * metricsAt(store, base).frontier_size).toLong
       } else (k + 1) % math.max(cfg.compactFrontierEvery, 1) != 0
     }
+    // U1: the three parts are disjoint by construction (new ⟂ seen ⊇ frontier;
+    // notDue ⟂ deferred by the due filter) — plain union, no merge shuffle.
+    // Persisted because the full-layout range write needs two passes
+    // (boundary sampling + the shuffle itself) and must not recompute the
+    // union branches; the delta layout never reads it, so nothing is cached.
     val nextFrontier =
-      if (deltaMode) notDue.unionByName(deferred).unionByName(newEntries)
-      else notDue.unionByName(deferred).unionByName(newEntries).persist()
+      notDue.unionByName(deferred).unionByName(newEntries).persist()
 
     // --- commit snapshot k+1 ------------------------------------------------
     // The remaining snapshot outputs (frontier / seen delta / compaction /
@@ -730,27 +563,6 @@ object CrawlRound {
               bloomBytes(BloomFilter.create(perShard, numBits)))
         }
       }
-    } else if (cfg.filterKind == "cuckoo") {
-      val merged = graft.functions.CuckooFilter.deserialize(prevCuckooBytes)
-      // delta shape is pinned to the (possibly regrown) prev filter's bucket
-      // count — cuckoo merge requires identical shapes
-      val deltaBytes = traced("cuckoo-build")(trulyNew.select($"url_hash").coalesce(4)
-        .select(org.apache.spark.sql.graftexpr.CuckooAgg($"url_hash",
-          cfg.bloomExpectedItems, merged.numBuckets).as("cf"))
-        .head().getAs[Array[Byte]](0))
-      merged.mergeInPlace(graft.functions.CuckooFilter.deserialize(deltaBytes))
-      // exactness contract: a cuckoo filter over capacity DROPS keys, which
-      // would turn "filter-clear ⇒ definitely new" into silent re-crawls
-      // (bloom degrades safely via fpp; cuckoo fails unsafely). Any drop —
-      // in the delta build, the prev filter, or this merge — triggers a
-      // distributed rebuild from the exact seen ∪ new set at doubled
-      // capacity (cuckooOfUrls doubles until clean).
-      val cf =
-        if (merged.failedInserts == 0) merged
-        else traced("cuckoo-regrow")(cuckooOfUrls(
-          seen.toDF().unionByName(newSeen.toDF()),
-          math.max(cfg.bloomExpectedItems, merged.numBuckets.toLong * 4) * 2))
-      pending.writeCuckoo(cf)
     } else {
       // same (expectedItems, fpp) as the persistent filter — mergeInPlace
       // requires identical bit-array sizes. Fan-in: every scan partition
@@ -770,89 +582,66 @@ object CrawlRound {
       pending.writeBloom(prevBloom)
     }
 
-    val (nNewF, nCandF) = {
-      val outputs = earlyOutputs ++ Seq(
-        fut((traced("write-frontier")(
-          if (deltaMode) {
-            // churn only: upserts (deferred + newly discovered) and removals
-            // (fetched this round + robots-denied). Each url appears at most
-            // once (the sets are disjoint); no range shuffle — the full
-            // rewrite happens on compaction rounds.
-            val upserts = deferred.toDF().select(frontierCols: _*)
-              .unionByName(newEntries.toDF().select(frontierCols: _*))
-              .withColumn("op", lit("u"))
-            val removals = tasks.toDF().select(frontierCols: _*)
-              .unionByName(withRobots.filter(!$"robots_ok")
-                .select(frontierCols: _*))
-              .withColumn("op", lit("r"))
-            upserts.unionByName(removals).write.parquet(pending.frontierDeltaPath)
-          } else orderedFrontierWrite(nextFrontier, pending.frontierPath)))),
-        fut((traced("write-seen")(
-          newSeen.write.parquet(pending.seenDeltaPath)))),
-        fut(writeFilter())) ++
-        // periodic compaction: materialize the whole seen set hash-partitioned,
-        // so loadSeen reads one clustered base + a few deltas (SURVEY.md §4.2)
-        (if (cfg.compactSeenEvery > 0 && (k + 1) % cfg.compactSeenEvery == 0)
-          Seq(fut((traced("compact-seen")(
-            seen.unionByName(newSeen)
-              .repartition(math.max(shufflePartitions, 1), $"url_hash_hi")
-              .write.parquet(pending.seenFullPath)))))
-        else Nil)
-      // The two manifest counts launch WITH the write jobs instead of after
-      // them: FIFO queues their single-stage cached scans behind the write
-      // tasks, so they complete inside the write wall instead of adding a
-      // measured ~0.7–1 s serial tail AFTER it — a constant slice at every
-      // core count. Unlike an Observation (see n_new's history above), a
-      // count is exact no matter which concurrent job materializes the
-      // cache first: whichever task computes a partition does so once under
-      // the block lock, and every later reader sees the cached rows.
-      val nNewFut = Future(scala.concurrent.blocking(
-        traced("n-new")(trulyNew.count())))
-      val nCandFut = Future(scala.concurrent.blocking(
-        traced("link-candidates")(cand.count())))
-      launched.synchronized {
-        launched += nNewFut.map(_ => ())
-        launched += nCandFut.map(_ => ())
-      }
-      Await.result(Future.sequence(outputs), Duration.Inf)
-      (nNewFut, nCandFut)
-    }
+    val outputs = earlyOutputs ++ Seq(
+      fut((traced("write-frontier")(
+        if (deltaMode) {
+          // churn only: upserts (deferred + newly discovered) and removals
+          // (fetched this round + robots-denied). Each url appears at most
+          // once (the sets are disjoint); no range shuffle — the full
+          // rewrite happens on compaction rounds.
+          val upserts = deferred.toDF().select(frontierCols: _*)
+            .unionByName(newEntries.toDF().select(frontierCols: _*))
+            .withColumn("op", lit("u"))
+          val removals = tasks.toDF().select(frontierCols: _*)
+            .unionByName(withRobots.filter(!$"robots_ok")
+              .select(frontierCols: _*))
+            .withColumn("op", lit("r"))
+          upserts.unionByName(removals).write.parquet(pending.frontierDeltaPath)
+        } else orderedFrontierWrite(nextFrontier, pending.frontierPath)))),
+      fut((traced("write-seen")(
+        newSeen.write.parquet(pending.seenDeltaPath)))),
+      fut(writeFilter())) ++
+      // periodic compaction: materialize the whole seen set hash-partitioned,
+      // so loadSeen reads one clustered base + a few deltas (SURVEY.md §4.2)
+      (if (cfg.compactSeenEvery > 0 && (k + 1) % cfg.compactSeenEvery == 0)
+        Seq(fut((traced("compact-seen")(
+          seen.unionByName(newSeen)
+            .repartition(math.max(shufflePartitions, 1), $"url_hash_hi")
+            .write.parquet(pending.seenFullPath)))))
+      else Nil)
+    // The manifest counts launch WITH the write jobs instead of after them:
+    // FIFO queues their single-stage cached scans behind the write tasks, so
+    // they complete inside the write wall instead of adding a measured
+    // ~0.7–1 s serial tail AFTER it — a constant slice at every core count.
+    // Each is a plain count over a persisted cache, exact no matter which
+    // concurrent job materializes the cache first: whichever task computes a
+    // partition does so once under the block lock, and every later reader
+    // sees the cached rows. Observations are not: one on the gate read 0 at
+    // spark.sql.shuffle.partitions=1, and one on trulyNew would undercount
+    // (see n_new's history above).
+    val gateF = fut(traced("gate-counts")(
+      withRobots.agg(count(lit(1)), count(when($"robots_ok", 1)))
+        .as[(Long, Long)].head()))
+    val nNewF = fut(traced("n-new")(trulyNew.count()))
+    val nCandF = fut(traced("link-candidates")(cand.count()))
+    Await.result(Future.sequence(outputs), Duration.Inf)
 
-    // The gate observation is sound because EXACTLY ONE job materializes the
-    // withRobots cache (the synchronous politeness/sequence pass, which
-    // completes before any other consumer runs) — unlike trulyNew, whose
-    // cache is raced by three concurrent writers, so its count comes from a
-    // plain count job launched alongside the writes (exact regardless of
-    // which job materializes the cache — see the staging block).
-    val gateRow = gateObs.get
-    val nDue = gateRow("n_due").asInstanceOf[Long]
-    val nAllowed = gateRow("n_allowed").asInstanceOf[Long]
-    val robotsDenied = nDue - nAllowed
-    // counts were launched alongside the write jobs (see the staging block)
-    // and are usually already complete by the time the writes drain
+    val (nDue, nAllowed) = Await.result(gateF, Duration.Inf)
     val nNew = Await.result(nNewF, Duration.Inf)
     val nCand = Await.result(nCandF, Duration.Inf)
 
     // deferred / frontier / seen sizes follow arithmetically — no extra jobs:
     // next_frontier = prev − due + deferred + new, deferred = allowed − gated
     val nDeferred = nAllowed - nFetched
-    val prevFrontierSize = manifestField(store, k, "frontier_size")
-    val prevSeenSize = manifestField(store, k, "seen_size")
-    val nFrontier = prevFrontierSize.map(_ - nDue + nDeferred + nNew)
-      .getOrElse(if (deltaMode) nextFrontier.count()
-        else spark.read.parquet(pending.frontierPath).count())
-    val nSeen = prevSeenSize.map(_ + nNew).getOrElse(seen.count() + nNew)
-    val metrics = RoundMetrics(k, nDue, robotsDenied, nFetched,
+    val prev = metricsAt(store, k)
+    val metrics = RoundMetrics(k, nDue, nDue - nAllowed, nFetched,
       nDeferred, nFetched, nErrors, nLinks, nLinks - nCand, nNew,
-      nFrontier, nSeen)
+      prev.frontier_size - nDue + nDeferred + nNew, prev.seen_size + nNew)
     pending.commit(manifestJson(metrics, cfg))
 
-    robotsCacheOpt.foreach(_.unpersist(blocking = false))
-    phase1CacheOpt.foreach(_.unpersist(blocking = false))
-    Seq(withRobots, hostRanked, seqParent.toDF(), deferred.toDF(),
+    Seq(withRobots, ranked, hostRanked, seqParent.toDF(), deferred.toDF(),
       fetched.toDF(), cand, trulyNew, nextFrontier.toDF(), frontier.toDF())
       .foreach(_.unpersist(blocking = false))
-    rulesBcOpt.foreach(_.destroy())
     RoundResult(k, metrics)
     } catch {
       case t: Throwable =>
@@ -865,10 +654,6 @@ object CrawlRound {
         throw t
     }
   }
-
-  private def manifestField(store: SnapshotStore, k: Int, field: String): Option[Long] =
-    store.manifest(k).flatMap(m =>
-      ("\"" + field + "\":(-?\\d+)").r.findFirstMatchIn(m).map(_.group(1).toLong))
 
   /** O1: materialize the frontier range-partitioned + sorted by the dequeue
     * order — next round's scan reads it near-sorted with minimal shuffle. */
@@ -924,6 +709,24 @@ object CrawlRound {
     })
     (out, sorted)
   }
+
+  /** The round metrics of a manifest written by [[manifestJson]]. A missing
+    * field throws: read as 0 it would silently corrupt every size derived
+    * from it in later rounds. */
+  def parseManifest(json: String): RoundMetrics = {
+    def field(f: String): Long = ("\"" + f + "\":(-?\\d+)").r.findFirstMatchIn(json)
+      .getOrElse(throw new IllegalArgumentException(s"manifest has no '$f': $json"))
+      .group(1).toLong
+    RoundMetrics(field("round").toInt, field("due"), field("robots_denied"),
+      field("gated"), field("deferred"), field("fetched"), field("fetch_errors"),
+      field("links_extracted"), field("links_deduped"), field("new_urls"),
+      field("frontier_size"), field("seen_size"))
+  }
+
+  /** The round metrics in committed snapshot k's manifest. */
+  def metricsAt(store: SnapshotStore, k: Int): RoundMetrics =
+    parseManifest(store.manifest(k).getOrElse(
+      throw new IllegalStateException(s"snapshot $k has no manifest")))
 
   /** Deterministic manifest: fixed key order, no wall-clock fields. */
   def manifestJson(m: RoundMetrics, cfg: CrawlConfig): String = {

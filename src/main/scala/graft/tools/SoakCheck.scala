@@ -11,13 +11,14 @@ import graft.sources.SnapshotStore
 /** Dev soak harness: a longer crawl (default 8 rounds, compaction every 3)
   * that cross-checks the arithmetically-derived manifest sizes against
   * actual table counts and re-asserts the global invariants at horizon.
-  * `runMain graft.tools.SoakCheck [rounds]` — exits nonzero on violation. */
+  * `runMain graft.tools.SoakCheck [rounds] [shards] [deltas]` — `shards` sets
+  * CrawlConfig.filterShards, a literal `deltas` the log-structured frontier.
+  * Exits nonzero on violation. */
 object SoakCheck {
   def main(args: Array[String]): Unit = {
     val rounds = args.headOption.getOrElse("8").toInt
-    val filterKind = args.lift(1).getOrElse("bloom")
-    val shards = args.lift(2).getOrElse("0").toInt
-    val frontierDeltas = args.lift(3).contains("deltas")
+    val shards = args.lift(1).getOrElse("0").toInt
+    val frontierDeltas = args.lift(2).contains("deltas")
     val spark = SparkSession.builder().master("local[8]")
       .appName("soak").config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
@@ -37,7 +38,7 @@ object SoakCheck {
     rm(java.nio.file.Paths.get(dir))
     val store = new SnapshotStore(spark, dir)
     val cfg = CrawlConfig(roundCap = 400, compactSeenEvery = 3,
-      filterKind = filterKind, filterShards = shards,
+      filterShards = shards,
       frontierDeltas = frontierDeltas, compactFrontierEvery = 3)
     Crawler.run(spark, store, SyntheticWeb.seeds(20), rounds, cfg)
 
@@ -50,15 +51,13 @@ object SoakCheck {
     val k = store.head.get
     check("ran all rounds", k == rounds)
     (1 to k).foreach { i =>
-      val m = store.manifest(i).get
-      def field(f: String): Long =
-        ("\"" + f + "\":(-?\\d+)").r.findFirstMatchIn(m).get.group(1).toLong
+      val m = CrawlRound.metricsAt(store, i)
       val fActual = store.loadFrontier(i).count()
       val sActual = store.loadSeen(i).count()
-      check(s"manifest frontier_size round $i", field("frontier_size") == fActual,
-        s"manifest=${field("frontier_size")} actual=$fActual")
-      check(s"manifest seen_size round $i", field("seen_size") == sActual,
-        s"manifest=${field("seen_size")} actual=$sActual")
+      check(s"manifest frontier_size round $i", m.frontier_size == fActual,
+        s"manifest=${m.frontier_size} actual=$fActual")
+      check(s"manifest seen_size round $i", m.seen_size == sActual,
+        s"manifest=${m.seen_size} actual=$sActual")
     }
     val pages = store.loadAllPages(k).persist()
     check("no url fetched twice over the whole soak",

@@ -103,13 +103,28 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("determinism: a second identical crawl reproduces ordering, digest, manifests") {
-    val store2 = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-det"))
-    Crawler.run(spark, store2, seeds, Rounds, cfg)
-    assert(Crawler.seenDigest(spark, store2) === Crawler.seenDigest(spark, store))
+    // inputs: the same session again, and one shuffle partition with AQE off
+    // (the shape where the gate counts once read 0 — due=0, robots_denied=0,
+    // deferred=-gated — and frontier_size drifted from the real table)
     val o1 = Crawler.ordering(spark, store).as[(Int, Long, String)].collect().toSeq
-    val o2 = Crawler.ordering(spark, store2).as[(Int, Long, String)].collect().toSeq
-    assert(o1 === o2)
-    (0 to Rounds).foreach(k => assert(store.manifest(k) === store2.manifest(k)))
+    for ((tag, confs) <- Seq("crawl-det" -> Map.empty[String, String],
+        "crawl-det-1part" -> Map("spark.sql.shuffle.partitions" -> "1",
+          "spark.sql.adaptive.enabled" -> "false"))) {
+      val saved = confs.keys.map(c => c -> spark.conf.getOption(c)).toMap
+      val store2 = new SnapshotStore(spark, SparkTestSession.tempDir(tag))
+      try {
+        confs.foreach { case (c, v) => spark.conf.set(c, v) }
+        Crawler.run(spark, store2, seeds, Rounds, cfg)
+      } finally saved.foreach {
+        case (c, Some(v)) => spark.conf.set(c, v)
+        case (c, None) => spark.conf.unset(c)
+      }
+      assert(Crawler.seenDigest(spark, store2) === Crawler.seenDigest(spark, store), tag)
+      val o2 = Crawler.ordering(spark, store2).as[(Int, Long, String)].collect().toSeq
+      assert(o1 === o2, tag)
+      (0 to Rounds).foreach(k =>
+        assert(store.manifest(k) === store2.manifest(k), s"$tag manifest $k"))
+    }
   }
 
   test("resume: interrupt after round 2, resume in a fresh store handle → identical") {
@@ -126,25 +141,15 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("bloom routing is exact: useBloom=false produces the identical crawl") {
+    // the exact reference: every candidate meets the shuffle-form anti-join;
+    // the golden `store` routes through the bloom into the scan form
     val s = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-nobloom"))
-    Crawler.run(spark, s, seeds, 3, cfg.copy(useBloom = false))
-    val sB = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-bloom"))
-    Crawler.run(spark, sB, seeds, 3, cfg.copy(useBloom = true))
-    assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, sB))
+    Crawler.run(spark, s, seeds, Rounds, cfg.copy(useBloom = false))
+    assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, store))
     val o1 = Crawler.ordering(spark, s).as[(Int, Long, String)].collect().toSeq
-    val o2 = Crawler.ordering(spark, sB).as[(Int, Long, String)].collect().toSeq
+    val o2 = Crawler.ordering(spark, store).as[(Int, Long, String)].collect().toSeq
     assert(o1 === o2)
-  }
-
-  test("cuckoo seen-filter produces the identical crawl to bloom and exact") {
-    val s = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-cuckoo"))
-    Crawler.run(spark, s, seeds, 3, cfg.copy(filterKind = "cuckoo"))
-    val sB = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-bloom2"))
-    Crawler.run(spark, sB, seeds, 3, cfg)
-    assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, sB))
-    val o1 = Crawler.ordering(spark, s).as[(Int, Long, String)].collect().toSeq
-    val o2 = Crawler.ordering(spark, sB).as[(Int, Long, String)].collect().toSeq
-    assert(o1 === o2)
+    (0 to Rounds).foreach(k => assert(s.manifest(k) === store.manifest(k)))
   }
 
   test("manifest sizes reconcile with actual table counts every round") {
@@ -152,49 +157,34 @@ class CrawlSpec extends AnyFunSuite {
     // sizes — this is the check that caught the union-renumbered
     // TaskContext.getPartitionId() row-loss bug (see assignGlobalSeq)
     (1 to Rounds).foreach { i =>
-      val m = store.manifest(i).get
-      def field(f: String): Long =
-        ("\"" + f + "\":(-?\\d+)").r.findFirstMatchIn(m).get.group(1).toLong
-      assert(field("frontier_size") === store.loadFrontier(i).count(),
+      val m = CrawlRound.metricsAt(store, i)
+      assert(CrawlRound.manifestJson(m, cfg) === store.manifest(i).get)
+      assert(m.frontier_size === store.loadFrontier(i).count(),
         s"frontier_size round $i")
-      assert(field("seen_size") === store.loadSeen(i).count(),
+      assert(m.seen_size === store.loadSeen(i).count(),
         s"seen_size round $i")
     }
+    // a missing field fails loudly instead of reading as 0
+    val e = intercept[IllegalArgumentException](CrawlRound.parseManifest(
+      store.manifest(1).get.replace("\"deferred\"", "\"deferred_\"")))
+    assert(e.getMessage.contains("no 'deferred'"))
   }
 
   test("cold path: lost filter file is rebuilt distributed, crawl stays identical") {
-    // bloom and cuckoo variants: crawl 2 rounds, delete the filter file from
-    // the head snapshot (simulates a lost/corrupt sidecar), resume to the end.
-    // The rebuild must come from the exact seen set — digests and ordering
-    // match the uninterrupted crawl bit-for-bit.
-    for ((kind, file) <- Seq("bloom" -> "bloom.bin", "cuckoo" -> "cuckoo.bin")) {
-      val dir = SparkTestSession.tempDir(s"crawl-coldpath-$kind")
-      val s1 = new SnapshotStore(spark, dir)
-      val c = cfg.copy(filterKind = kind)
-      Crawler.run(spark, s1, seeds, 2, c)
-      val lost = java.nio.file.Paths.get(dir, s"snapshot-${s1.head.get}", file)
-      assert(java.nio.file.Files.deleteIfExists(lost), s"no $file to delete")
-      Crawler.run(spark, s1, seeds, Rounds, c) // resumes through the cold path
-      assert(Crawler.seenDigest(spark, s1) === Crawler.seenDigest(spark, store),
-        s"$kind cold-path digest")
-      val o1 = Crawler.ordering(spark, s1).as[(Int, Long, String)].collect().toSeq
-      val o2 = Crawler.ordering(spark, store).as[(Int, Long, String)].collect().toSeq
-      assert(o1 === o2, s"$kind cold-path ordering")
-    }
-  }
-
-  test("cuckoo over-capacity regrows instead of dropping keys (exactness holds)") {
-    // a filter sized for ~64 items over a crawl that sees thousands: without
-    // the regrow path this would silently drop keys and re-crawl URLs
-    val s = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-tinycuckoo"))
-    Crawler.run(spark, s, seeds, 3, cfg.copy(filterKind = "cuckoo",
-      bloomExpectedItems = 64L))
-    val sB = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-bigbloom"))
-    Crawler.run(spark, sB, seeds, 3, cfg)
-    assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, sB))
-    // the persisted filter must have regrown to hold the whole seen set
-    val cf = s.loadCuckoo(s.head.get).get
-    assert(cf.failedInserts === 0L, "persisted filter carries dropped keys")
+    // crawl 2 rounds, delete the bloom file from the head snapshot (simulates
+    // a lost/corrupt sidecar), resume to the end. The rebuild must come from
+    // the exact seen set — digests and ordering match the uninterrupted
+    // crawl bit-for-bit.
+    val dir = SparkTestSession.tempDir("crawl-coldpath-bloom")
+    val s1 = new SnapshotStore(spark, dir)
+    Crawler.run(spark, s1, seeds, 2, cfg)
+    val lost = java.nio.file.Paths.get(dir, s"snapshot-${s1.head.get}", "bloom.bin")
+    assert(java.nio.file.Files.deleteIfExists(lost), "no bloom.bin to delete")
+    Crawler.run(spark, s1, seeds, Rounds, cfg) // resumes through the cold path
+    assert(Crawler.seenDigest(spark, s1) === Crawler.seenDigest(spark, store))
+    val o1 = Crawler.ordering(spark, s1).as[(Int, Long, String)].collect().toSeq
+    val o2 = Crawler.ordering(spark, store).as[(Int, Long, String)].collect().toSeq
+    assert(o1 === o2)
   }
 
   test("sharded URL-seen filter produces the identical crawl to the broadcast form") {
@@ -212,22 +202,6 @@ class CrawlSpec extends AnyFunSuite {
     (0 to 4).foreach(k => assert(s.manifest(k) === sB.manifest(k)))
     // the shard files really exist and carry the whole seen set across shards
     assert(s.filterShardsExist(s.head.get, 5))
-  }
-
-  test("robots forms: fused (default), map, and join produce the identical crawl") {
-    val sF = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-robotsfused"))
-    Crawler.run(spark, sF, seeds, 3, cfg) // default robotsForm = "fused"
-    val sM = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-robotsmap"))
-    Crawler.run(spark, sM, seeds, 3, cfg.copy(robotsForm = "map"))
-    val sJ = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-robotsjoin"))
-    Crawler.run(spark, sJ, seeds, 3, cfg.copy(robotsForm = "join"))
-    val oF = Crawler.ordering(spark, sF).as[(Int, Long, String)].collect().toSeq
-    for (s <- Seq(sM, sJ)) {
-      assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, sF))
-      val o = Crawler.ordering(spark, s).as[(Int, Long, String)].collect().toSeq
-      assert(o === oF)
-      (0 to 3).foreach(k => assert(s.manifest(k) === sF.manifest(k)))
-    }
   }
 
   test("invariant report: six checks, zero violations on the golden crawl") {
@@ -268,43 +242,19 @@ class CrawlSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("seen-join forms: scan (default) and shuffle produce the identical crawl") {
-    // the shared golden `store` runs the default scan form; the shuffle form
-    // (plain left-anti) must yield the same crawl bit-for-bit — the join
-    // form is a physical choice, never a semantic one. Exact-only
-    // (useBloom=false) exercises the unfiltered path, which always takes
-    // the shuffle form regardless of config.
-    val sSh = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-seenshuffle"))
-    Crawler.run(spark, sSh, seeds, Rounds, cfg.copy(seenJoin = "shuffle"))
-    val sEx = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-seenexact"))
-    Crawler.run(spark, sEx, seeds, Rounds, cfg.copy(useBloom = false))
-    val oF = Crawler.ordering(spark, store).as[(Int, Long, String)].collect().toSeq
-    for (s <- Seq(sSh, sEx)) {
-      assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, store))
+  test("salting: 1 (unsalted), 4 and 16 salt buckets give the identical crawl") {
+    // keep-proof in practice: one bucket per host is the unsalted top-k; the
+    // golden `store` runs the default 16 buckets
+    assert(cfg.saltBuckets === 16)
+    val oRef = Crawler.ordering(spark, store).as[(Int, Long, String)].collect().toSeq
+    for (b <- Seq(1, 4)) {
+      val s = new SnapshotStore(spark, SparkTestSession.tempDir(s"crawl-salt$b"))
+      Crawler.run(spark, s, seeds, Rounds, cfg.copy(saltBuckets = b))
+      assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, store), s"$b buckets")
       val o = Crawler.ordering(spark, s).as[(Int, Long, String)].collect().toSeq
-      assert(o === oF)
-      (0 to Rounds).foreach(k => assert(s.manifest(k) === store.manifest(k)))
+      assert(o === oRef, s"$b buckets")
+      (0 to Rounds).foreach(k => assert(s.manifest(k) === store.manifest(k), s"$b buckets"))
     }
-  }
-
-  test("salting: salt-all (default), hot-threshold, and unsalted gates are identical") {
-    // keep-proof in practice, all three policies: every host salted via the
-    // codegen pmod column (default), only threshold-hot hosts salted via the
-    // broadcast-map UDF (needs a counts pass → map form), and no salting
-    val saltAll = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-saltall"))
-    Crawler.run(spark, saltAll, seeds, 3, cfg.copy(saltBuckets = 4))
-    val hotOnly = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-salt"))
-    Crawler.run(spark, hotOnly, seeds, 3, cfg.copy(robotsForm = "map",
-      saltAllHosts = false, hotHostThreshold = 1, saltBuckets = 4))
-    val plain = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-plain"))
-    Crawler.run(spark, plain, seeds, 3, cfg.copy(saltAllHosts = false))
-    val o1 = Crawler.ordering(spark, saltAll).as[(Int, Long, String)].collect().toSeq
-    val o2 = Crawler.ordering(spark, hotOnly).as[(Int, Long, String)].collect().toSeq
-    val o3 = Crawler.ordering(spark, plain).as[(Int, Long, String)].collect().toSeq
-    assert(o1 === o3)
-    assert(o2 === o3)
-    assert(Crawler.seenDigest(spark, saltAll) === Crawler.seenDigest(spark, plain))
-    assert(Crawler.seenDigest(spark, hotOnly) === Crawler.seenDigest(spark, plain))
   }
 
   test("text extraction is byte-stable: sha256 recomputes identically") {
